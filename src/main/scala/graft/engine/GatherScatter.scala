@@ -6,6 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.LinkGraph
 
@@ -19,32 +20,51 @@ import graft.core.LinkGraph
  *  - Edges are hash-partitioned by src; within a partition they are
  *    re-encoded as (src-index, out-index) pairs grouped by TARGET partition,
  *    where out-index points into a static per-(block, target) unique-dst
- *    array. Gather is then `vals(outIdx(e)) += contrib(srcIdx(e))` — no
+ *    array. Gather is then `vals(outIdx(e)) ⊕= contrib(srcIdx(e))` — no
  *    hashing, no allocation beyond the output buffers.
- *  - The scatter is ONE all-to-all of packed `Array[Double]` records (≤ n×n
- *    of them — the row-reduce all-to-all, `multinode/spmspv.h:141-203`); the
- *    receiver folds them through a static incoming-index table (`inIdx`,
- *    built once) into a dense per-partition accumulator. Because each
- *    (source block, hub dst) contributes ONE pre-summed slot, a hub vertex
- *    receives at most n partials per superstep — the two-phase (salted) ⊕
- *    the north rule asks for is structural here, not bolted on.
- *  - Vertex state is a dense `Array[Double]` aligned to a static per-partition
- *    id layout (receivers first, in-degree-0 srcs after), so the apply phase
- *    is a sequential array pass and convergence checking is index-aligned.
+ *  - The scatter is ONE all-to-all of packed per-(source block, target)
+ *    records (≤ n×n of them — the row-reduce all-to-all,
+ *    `multinode/spmspv.h:141-203`); the receiver folds them through a static
+ *    incoming-index table (`inIdx`, built once) into a dense per-partition
+ *    accumulator. Because each (source block, hub dst) contributes ONE
+ *    pre-summed slot, a hub vertex receives at most n partials per
+ *    superstep — the two-phase (salted) ⊕ is structural here, not bolted on.
+ *  - Vertex state is dense and aligned to a static per-partition id layout
+ *    (receivers first, in-degree-0 srcs after), so the apply phase is a
+ *    sequential array pass and convergence checking is index-aligned.
  *
- * Skew handling (north rule: "salted hot vertices, degree-aware split"):
- * srcs whose out-degree exceeds `hotDegree` have their edge lists SPLIT
- * across partitions — each hot edge is routed by mix(dst) instead of
- * mix(src), co-locating it with its receiver — and the (few) hot ranks are
- * broadcast per superstep (the mirror/ghost-vertex pattern; GraphMat's
- * "broadcast x to column ranks" phase, `multinode/spmspv.h:62-116`). A
- * million-out-degree hub therefore costs every partition |E_hub|/n edges
- * instead of one partition |E_hub|.
+ * Skew handling ("salted hot vertices, degree-aware split"): srcs whose
+ * out-degree exceeds `hotDegree` have their edge lists SPLIT across
+ * partitions — each hot edge is routed by mix(dst) instead of mix(src),
+ * co-locating it with its receiver — and the (few) hot values are broadcast
+ * per superstep (the mirror/ghost-vertex pattern; GraphMat's "broadcast x to
+ * column ranks" phase, `multinode/spmspv.h:62-116`). A million-out-degree
+ * hub therefore costs every partition |E_hub|/n edges instead of one
+ * partition |E_hub|.
  *
- * One RDD job plus one (skippable) hot-mirror job per superstep, one shuffle,
- * no Catalyst re-planning, no per-row boxing. Throughput path only; semantics
- * verified against the Column-algebra engine (allclose 1e-9) in
- * GatherScatterSpec.
+ * One driver runs every iterative kernel on these structures ([[CsrLoop]]):
+ * the (+,×) PageRank family here, the (min,+) and mode kernels below,
+ * [[DeltaPrCsr]], [[ToposortCsr]] and [[VectorSuperstep]]. A kernel supplies
+ * its gather and apply; the driver owns the rest. Per superstep it issues
+ * one count job, plus one hub-mirror job when the graph has hot vertices,
+ * plus the [[CsrCheckpoint]] writes when durable; there is one shuffle, no
+ * Catalyst re-planning and no per-row boxing. Hub-less fixed-iteration
+ * PageRank chains four supersteps into each job instead.
+ *
+ * The exchange is SPLIT. A partition's contribution to ITSELF is most of the
+ * exchange whenever the partitioning has locality (keyShift co-location
+ * makes it ~all of it), and shipping it through the shuffle pays serialize +
+ * disk write + read even when the bytes never leave the executor. So the
+ * gather output is persisted (deserialized MEMORY_AND_DISK = the live
+ * arrays, zero-copy) and the apply reads its self-contribution straight from
+ * the block cache; only tp != p records enter the shuffle, so cross-JVM
+ * bytes equal the true partition cut. Placement stays process-local under
+ * [[GatherScatter.engineConfs]]: reduce-locality off makes the cached graph
+ * blocks the ONLY preferred location, so map output, block cache and apply
+ * task never separate.
+ *
+ * Throughput path only; semantics verified against the Column-algebra
+ * engine in GatherScatterSpec and the per-kernel specs.
  */
 
 /** Durable mid-algorithm checkpoint/resume for the CSR engine (north rule:
@@ -763,7 +783,7 @@ object GatherScatter {
   private val metricLineRe =
     """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
 
-  private def writeCheckpoint(g: PrGraph, cp: CsrCheckpoint, iter: Int,
+  private[engine] def writeCheckpoint(g: PrGraph, cp: CsrCheckpoint, iter: Int,
       converged: Boolean, state: RDD[Array[Double]],
       metrics: Seq[IterationMetrics]): Unit = {
     val sc = g.csr.sparkContext
@@ -803,7 +823,7 @@ object GatherScatter {
 
   /** None when no committed checkpoint exists; else (state aligned to this
     * graph's layout, iteration, converged, prior metrics). */
-  private def readCheckpoint(g: PrGraph, cp: CsrCheckpoint)
+  private[engine] def readCheckpoint(g: PrGraph, cp: CsrCheckpoint)
       : Option[(RDD[Array[Double]], Int, Boolean, Vector[IterationMetrics])] = {
     val sc = g.csr.sparkContext
     val root = s"${cp.dir}/${cp.runId}"
@@ -846,276 +866,61 @@ object GatherScatter {
     g.verts.mapPartitions(it => Iterator.single(Array.fill(it.next().ids.length)(0.3)),
       preservesPartitioning = true)
 
-  /** Collect hot-vertex ranks (tiny) and broadcast — the per-superstep mirror. */
-  private def hotMirror(g: PrGraph, ranks: RDD[Array[Double]]): Array[Double] = {
-    if (g.hotIds.isEmpty) return Array.emptyDoubleArray
-    val pairs = ranks.zipPartitions(g.verts) { (rIt, vIt) =>
-      val pr = rIt.next(); val vm = vIt.next()
-      Iterator.range(0, vm.hotHomeGlobal.length)
-        .map(i => (vm.hotHomeGlobal(i), pr(vm.hotHomeLocal(i))))
-    }.collect()
-    val arr = new Array[Double](g.hotIds.length)
-    pairs.foreach { case (gIdx, v) => arr(gIdx) = v }
-    arr
-  }
+  /** Hub mirror of a scalar state: one double per hot vertex. */
+  private val scalarHub = CsrLoop.Hub[Array[Double]](1, (s, li, out, o) => out(o) = s(li))
 
-  /** The gather (⊗ + per-target pre-sum ⊕): emits (targetPartition,
-    * (sourcePartition, packed partial sums aligned to outIds)). */
-  private def gatherPhase(ranks: RDD[Array[Double]], g: PrGraph,
-                          hotPr: Broadcast[Array[Double]]): RDD[(Int, (Int, Array[Double]))] =
+  private val rankBlock: (VertexMeta, Array[Double]) => RankBlock =
+    (vm, pr) => RankBlock(vm.ids, pr)
+
+  /** The PageRank gather (⊗ = pr/outdeg, pre-summed per target partition);
+    * hub-shard sources read the broadcast mirror. */
+  private def prGather(ranks: RDD[Array[Double]], g: PrGraph,
+                       hub: Broadcast[Array[Double]]): RDD[(Int, (Int, Array[Double]))] =
     ranks.zipPartitions(g.csr, g.verts, preservesPartitioning = false) { (rIt, cIt, vIt) =>
       val pr = rIt.next(); val blk = cIt.next(); val vm = vIt.next()
-      val p = TaskContext.getPartitionId()
-      val nS = blk.srcs.length
-      val contrib = new Array[Double](nS)
+      val contrib = new Array[Double](blk.srcs.length)
       var i = 0
-      while (i < nS) {
-        contrib(i) = pr(vm.srcPrIdx(i)) * blk.invDeg(i)
-        i += 1
-      }
-      val out = new Array[Array[Double]](blk.outIds.length)
-      var tp = 0
-      while (tp < blk.outIds.length) {
-        val ids = blk.outIds(tp)
-        if (ids != null) {
-          val vals = new Array[Double](ids.length)
-          val es = blk.edgeSrcIdx(tp); val eo = blk.edgeOutIdx(tp)
-          var e = 0
-          while (e < es.length) { vals(eo(e)) += contrib(es(e)); e += 1 }
-          out(tp) = vals
-        }
-        tp += 1
-      }
-      // hot-shard edges: contrib from the broadcast mirror; target bucket is
-      // this partition itself (they were routed here by dst)
-      if (blk.hotEdgeSrcIdx.length > 0) {
-        val hp = hotPr.value
-        val hc = new Array[Double](blk.hotLocal.length)
-        i = 0
-        while (i < hc.length) {
-          hc(i) = hp(blk.hotLocal(i)) * blk.hotLocalInvDeg(i)
-          i += 1
-        }
-        if (out(p) == null) out(p) = new Array[Double](
-          if (blk.outIds(p) == null) 0 else blk.outIds(p).length)
-        val vals = out(p)
-        val hs = blk.hotEdgeSrcIdx; val ho = blk.hotEdgeOutIdx
-        var e = 0
-        while (e < hs.length) { vals(ho(e)) += hc(hs(e)); e += 1 }
-      }
-      Iterator.range(0, out.length).filter(out(_) != null).map(tp => (tp, (p, out(tp))))
+      while (i < contrib.length) { contrib(i) = pr(vm.srcPrIdx(i)) * blk.invDeg(i); i += 1 }
+      CsrLoop.sumGather(blk, TaskContext.getPartitionId(), contrib,
+        CsrLoop.hubVals(blk, hub, perDegree = true), nonZeroOnly = false)
     }
 
-  // ---- split exchange --------------------------------------------------
-  //
-  // A partition's contribution to ITSELF is most of the exchange whenever the
-  // partitioning has locality (keyShift co-location makes it ~all of it), and
-  // shipping it through the shuffle pays serialize + disk write + read even
-  // when the bytes never leave the executor. So each superstep SPLITS:
-  //  - the self-contribution stays in the lazily-persisted gather output
-  //    (deserialized MEMORY_AND_DISK = the live arrays, zero-copy) and the
-  //    apply stage reads it straight from the block cache;
-  //  - only tp != p records enter the shuffle, so cross-JVM bytes equal the
-  //    true partition cut.
-  // The caller owns the returned `gathered` handle and unpersists it once the
-  // superstep's consumer is materialized. Placement stays process-local under
-  // the engine confs (see engineConfs): reduce-locality off makes the cached
-  // graph blocks the ONLY preferred location, so map output, block cache and
-  // apply task never separate.
-
-  /**
-   * One LAZY superstep for the fixed-iteration path: gather → split exchange
-   * → dense apply, with in-degree-0 slots pinned to their initial 0.3 (they
-   * never receive, so the previous vector need not be read). The input rank
-   * RDD is consumed exactly ONCE, which lets the driver chain K supersteps
-   * into a single pipelined job — no per-superstep count, no per-superstep
-   * job-scheduling overhead. Returns (newRanks, gathered handle).
-   */
-  private def superstepLazy(g: PrGraph, ranks: RDD[Array[Double]],
-                            alpha: Double): (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherPhase(ranks, g, null)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, preservesPartitioning = true) {
-      (rIt, lIt, mIt) =>
-        val (vm, inIdx) = mIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
+  /** One PageRank superstep: pr' = α + (1−α)·Σ on receivers; in-degree-0
+    * vertices never receive and keep their initial 0.3. With `changed` set,
+    * the apply reads the previous ranks and counts vertices that moved more
+    * than `tol`; without it the input is read exactly once (lazy chaining). */
+  private def prStep(g: PrGraph, ranks: RDD[Array[Double]], hub: Broadcast[Array[Double]],
+                     alpha: Double, tol: Double,
+                     changed: LongAccumulator): CsrLoop.Step[Array[Double]] =
+    CsrLoop.exchange(g, prGather(ranks, g, hub), if (changed == null) null else ranks) {
+      (vm, inIdx, old, recs) =>
+        val acc = CsrLoop.sumFold(vm, inIdx, recs)
         val nV = vm.ids.length
         val newPr = new Array[Double](nV)
-        var i = 0
-        while (i < vm.nRecv) { newPr(i) = alpha + (1.0 - alpha) * acc(i); i += 1 }
-        while (i < nV) { newPr(i) = 0.3; i += 1 } // in-degree-0: keep init
-        Iterator.single(newPr)
-    }
-    (next, gathered)
-  }
-
-  /** One superstep: gather → split exchange → dense apply. Returns the new
-    * rank vectors, the gathered handle (caller unpersists after the superstep
-    * materializes) and (when `tol` >= 0) counts vertices that moved more than
-    * tol. `hotPr` is the per-superstep hub mirror (null on hubless graphs,
-    * never dereferenced then); the caller owns it too. */
-  private def superstep(g: PrGraph, ranks: RDD[Array[Double]], alpha: Double,
-                        tol: Double,
-                        changedAcc: Option[org.apache.spark.util.LongAccumulator],
-                        hotPr: Broadcast[Array[Double]])
-  : (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherPhase(ranks, g, hotPr)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, ranks, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
-        val nV = vm.ids.length
-        val newPr = new Array[Double](nV)
-        var changed = 0L
+        var moved = 0L
         var i = 0
         while (i < vm.nRecv) {
           val v = alpha + (1.0 - alpha) * acc(i)
           newPr(i) = v
-          if (tol >= 0 && math.abs(v - old(i)) > tol) changed += 1
+          if (old != null && tol >= 0 && math.abs(v - old(i)) > tol) moved += 1
           i += 1
         }
-        while (i < nV) { newPr(i) = old(i); i += 1 } // in-degree-0: never receive
-        // accumulator updated inside a TRANSFORMATION: a task retry or
-        // speculative duplicate can double-count moved vertices. That error
-        // is one-sided by construction — the stop rule is `changed == 0`, and
-        // duplication can only inflate a nonzero count (delaying convergence
-        // by one extra superstep), never fabricate zero from nonzero — so
-        // correctness of the fixpoint is unaffected.
-        changedAcc.foreach(_.add(changed))
-        Iterator.single(newPr)
+        while (i < nV) { newPr(i) = 0.3; i += 1 }
+        if (changed != null) changed.add(moved)
+        newPr
     }
-    (next, gathered)
-  }
-
-  private def materialize(g: PrGraph, ranks: RDD[Array[Double]]): RDD[RankBlock] = {
-    val out = ranks.zipPartitions(g.verts, preservesPartitioning = true) { (rIt, vIt) =>
-      Iterator.single(RankBlock(vIt.next().ids, rIt.next()))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
-  }
 
   /**
    * GraphMat-semantics PageRank, fixed iteration count: pr' = α + (1−α)·Σ
    * pr/outdeg applied to message receivers only; in-degree-0 vertices never
    * receive and keep their initial 0.3 (`src/PageRank.cpp:81-161`,
-   * apply-on-receive per `GraphMatRuntime.h:195-225`).
+   * apply-on-receive per `GraphMatRuntime.h:195-225`). Hub-less graphs chain
+   * the supersteps lazily (see [[CsrLoop.run]]).
    */
-  def pageRank(g: PrGraph, alpha: Double, iterations: Int,
-               checkpointEvery: Int = 4): RDD[RankBlock] = {
-    if (g.hotIds.isEmpty) {
-      // hub-less graph: chain all supersteps LAZILY — one pipelined job per
-      // `checkpointEvery`-superstep segment instead of 2 jobs per superstep
-      // (valid because the lazy superstep consumes its input exactly once;
-      // see superstepLazy). A segment barrier is a BARE count(): completed
-      // shuffle-map stages are skipped by later jobs (shuffle-file reuse),
-      // so the barrier serializes nothing — its only job is to bound how
-      // many per-superstep gathered blocks are live at once. All but the
-      // NEWEST gathered block can then be freed: superstep k+1's stage may
-      // re-run apply_k (a narrow pass over shuffle_k's files + gathered_k),
-      // but gathered_{<k}'s consumers are behind existing shuffle files and
-      // never re-read. An executor loss degrades to lineage recompute —
-      // unpersist does not truncate lineage.
-      var ranks = initRanks(g)
-      var it = 0
-      var pending = List.empty[RDD[_]]
-      var lastCp: Option[RDD[Array[Double]]] = None
-      val segment = math.max(1, checkpointEvery)
-      // the bare count() barrier does NOT truncate lineage; without a real
-      // checkpoint the DAG deepens linearly with `iterations` (segment jobs
-      // re-walk the whole chain, executor loss cascades recomputation toward
-      // iteration 0). Truncate every `lineageEvery` supersteps.
-      val lineageEvery = math.max(segment, 32 / segment * segment)
-      while (it < iterations) {
-        val (nr, gth) = superstepLazy(g, ranks, alpha)
-        ranks = nr
-        pending ::= gth
-        it += 1
-        if (it % segment == 0 && it < iterations) {
-          if (it % lineageEvery == 0) {
-            ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            ranks.localCheckpoint()
-            ranks.count()
-            // lineage now starts at `ranks`: every older gathered block and
-            // the previous checkpoint are unreachable — free them all
-            pending.foreach(_.unpersist(blocking = false))
-            pending = Nil
-            lastCp.foreach(_.unpersist(blocking = false))
-            lastCp = Some(ranks)
-          } else {
-            ranks.count()
-            pending match {
-              case keep :: olds =>
-                olds.foreach(_.unpersist(blocking = false))
-                pending = List(keep)
-              case Nil =>
-            }
-          }
-        }
-      }
-      val out = materialize(g, ranks)
-      pending.foreach(_.unpersist(blocking = false))
-      lastCp.foreach(_.unpersist(blocking = false))
-      out
-    } else {
-      // hub graphs need the per-superstep mirror broadcast (a driver action),
-      // so each superstep is materialized
-      val sc = g.csr.sparkContext
-      var ranks = initRanks(g).persist(StorageLevel.MEMORY_AND_DISK)
-      ranks.count()
-      var prev = ranks
-      var it = 0
-      val iterLog = sys.env.contains("SPARK_GRAFT_ITERLOG")
-      while (it < iterations) {
-        val t0 = if (iterLog) System.nanoTime() else 0L
-        val hotPr = sc.broadcast(hotMirror(g, ranks))
-        val (nr, gth) = superstep(g, ranks, alpha, tol = -1.0, changedAcc = None,
-            hotPr)
-        val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((it + 1) % checkpointEvery == 0) newRanks.localCheckpoint()
-        newRanks.count()
-        // free the mirror's executor copies and the superstep's gathered
-        // blocks now that the superstep is materialized (unpersist, not
-        // destroy — see build()); without this a long run accumulates one
-        // broadcast + one gather snapshot per superstep until GC
-        gth.unpersist(blocking = false)
-        hotPr.unpersist(blocking = false)
-        if (iterLog) println(f"[iter] superstep $it: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        prev.unpersist(blocking = false)
-        prev = newRanks
-        ranks = newRanks
-        it += 1
-      }
-      val out = materialize(g, ranks)
-      ranks.unpersist(blocking = false)
-      out
-    }
-  }
+  def pageRank(g: PrGraph, alpha: Double, iterations: Int): RDD[RankBlock] =
+    CsrLoop.run(g, CsrLoop.Step(initRanks(g), null), iterations, hub = scalarHub,
+        chained = g.hotIds.isEmpty)(
+      (r, hp, _, _) => prStep(g, r, hp, alpha, -1.0, null))(rankBlock)._1
 
   /**
    * Personalized PageRank on the CSR path — the same gather/split-exchange
@@ -1128,10 +933,7 @@ object GatherScatter {
    * (CoreMetricsSpec parity; g_ppr_csr shares g_ppr's unrolled oracle).
    */
   def personalizedPageRank(g: PrGraph, isSource: Long => Boolean,
-                           alpha: Double, iterations: Int,
-                           checkpointEvery: Int = 8): RDD[RankBlock] = {
-    val sc = g.csr.sparkContext
-    val idPart = new IdPartitioner(g.numPartitions)
+                           alpha: Double, iterations: Int): RDD[RankBlock] = {
     val base = g.verts.mapPartitions({ it =>
       val vm = it.next()
       val b = new Array[Double](vm.ids.length)
@@ -1139,28 +941,11 @@ object GatherScatter {
       while (i < b.length) { if (isSource(vm.ids(i))) b(i) = 1.0; i += 1 }
       Iterator.single(b)
     }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks: RDD[Array[Double]] = base // init pr0 = s
-    var prev: RDD[Array[Double]] = null
-    var it = 0
-    while (it < iterations) {
-      val hotPr = sc.broadcast(hotMirror(g, ranks))
-      val gathered = gatherPhase(ranks, g, hotPr)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val remote = gathered.mapPartitionsWithIndex(
-          (p, itr) => itr.filter(_._1 != p), preservesPartitioning = false)
-        .partitionBy(idPart)
-      val nr = remote.zipPartitions(gathered, g.meta, base,
-          preservesPartitioning = true) { (rIt, lIt, mIt, bIt) =>
-        val (vm, inIdx) = mIt.next(); val b = bIt.next()
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vals.length) { acc(idx(i)) += vals(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
+    // init pr0 = s: a view, so the loop frees it without freeing `base`
+    val pr0 = base.mapPartitions(identity, preservesPartitioning = true)
+    val (out, _) = CsrLoop.run(g, CsrLoop.Step(pr0, null), iterations, hub = scalarHub)(
+      (r, hp, _, _) => CsrLoop.exchange(g, prGather(r, g, hp), base) { (vm, inIdx, b, recs) =>
+        val acc = CsrLoop.sumFold(vm, inIdx, recs)
         val nV = vm.ids.length
         val newPr = new Array[Double](nV)
         var i = 0
@@ -1168,20 +953,8 @@ object GatherScatter {
           newPr(i) = alpha * b(i) + (1.0 - alpha) * acc(i); i += 1
         }
         while (i < nV) { newPr(i) = alpha * b(i); i += 1 }
-        Iterator.single(newPr)
-      }
-      val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((it + 1) % checkpointEvery == 0) newRanks.localCheckpoint()
-      newRanks.count()
-      gathered.unpersist(blocking = false)
-      hotPr.unpersist(blocking = false)
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = newRanks
-      ranks = newRanks
-      it += 1
-    }
-    val out = materialize(g, ranks)
-    if (prev != null) prev.unpersist(blocking = false)
+        newPr
+      })(rankBlock)
     base.unpersist(blocking = false)
     out
   }
@@ -1200,43 +973,14 @@ object GatherScatter {
    */
   def pageRankConverged(g: PrGraph, alpha: Double = 0.3, tol: Double = 1e-5,
                         maxIterations: Int = 200,
-                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
-    var ranks = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => initRanks(g)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    var prev = ranks
-    while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"changed-$it")
-      val hotPr = if (g.hotIds.isEmpty) null
-                  else sc.broadcast(hotMirror(g, ranks))
-      val (nr, gth) = superstep(g, ranks, alpha, tol, Some(changedAcc), hotPr)
-      val newRanks = nr.persist(StorageLevel.MEMORY_AND_DISK)
-      newRanks.count()
-      gth.unpersist(blocking = false)
-      if (hotPr != null) hotPr.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newRanks
-      ranks = newRanks
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= maxIterations)
-          writeCheckpoint(g, c, it, converged, ranks, metrics)
-      }
-    }
-    val out = materialize(g, ranks)
-    ranks.unpersist(blocking = false)
-    (out, it)
-  }
+                        cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    CsrLoop.run(g, CsrLoop.Step(initRanks(g), null), maxIterations, hub = scalarHub,
+        untilQuiet = true, durable = cp.map(valuesDurable))(
+      (r, hp, _, changed) => prStep(g, r, hp, alpha, tol, changed))(rankBlock)
+
+  /** Checkpointing of a state that IS its values. */
+  private def valuesDurable(cp: CsrCheckpoint) =
+    CsrLoop.Durable[Array[Double]](cp, a => a, a => a)
 
   // ---- the (min, +) semiring on the same static exchange -----------------
   //
@@ -1251,8 +995,8 @@ object GatherScatter {
   // (delta = 0, bidirectional edges — `src/ConnectedComponents.cpp`) and BFS
   // levels (delta = 1, out-edges — `src/BFS.cpp:40-156`). Unlike PageRank's
   // float ⊕, min is idempotent, so a task retry or speculative duplicate
-  // cannot corrupt the fixpoint at all; the accumulator argument in
-  // `superstep` applies one-sided here too.
+  // cannot corrupt the fixpoint at all; the accumulator argument of
+  // [[CsrLoop.run]] applies one-sided here too.
   //
   // Values ride the rank plumbing as Doubles; vertex LABELS (CC) must
   // therefore be exact in a Double — enforced as ids < 2^53 at init.
@@ -1322,45 +1066,6 @@ object GatherScatter {
       Iterator.range(0, out.length).filter(out(_) != null).map(tp => (tp, (p, out(tp))))
     }
 
-  private def minStep(g: PrGraph, vals: RDD[(Array[Double], Boolean)], delta: Double,
-                      changedAcc: org.apache.spark.util.LongAccumulator,
-                      hotV: Broadcast[Array[Double]], hotActive: Boolean,
-                      useW: Boolean): (RDD[(Array[Double], Boolean)], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherMinPhase(vals, g, delta, hotV, hotActive, useW)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, vals, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()._1
-        val p = TaskContext.getPartitionId()
-        val acc = Array.fill(vm.nRecv)(Double.PositiveInfinity)
-        @inline def fold(q: Int, vs: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var i = 0
-          while (i < vs.length) { if (vs(i) < acc(idx(i))) acc(idx(i)) = vs(i); i += 1 }
-        }
-        lIt.foreach { case (tp, (q, vs)) => if (tp == p) fold(q, vs) }
-        rIt.foreach { case (_, (q, vs)) => fold(q, vs) }
-        val nV = vm.ids.length
-        val out = new Array[Double](nV)
-        var changed = 0L
-        var i = 0
-        while (i < vm.nRecv) {
-          val nv = if (acc(i) < old(i)) acc(i) else old(i)
-          out(i) = nv
-          if (nv < old(i)) changed += 1
-          i += 1
-        }
-        while (i < nV) { out(i) = old(i); i += 1 }
-        changedAcc.add(changed)
-        Iterator.single((out, changed > 0L))
-    }
-    (next, gathered)
-  }
-
   /** Run the (min, +) propagation from `init` to its exact fixpoint.
     * Returns (value blocks, supersteps run). Vertices never reached keep
     * their init value (+∞ for single-source inits). With `cp`, state is
@@ -1376,71 +1081,55 @@ object GatherScatter {
                   cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
     require(!useWeights || g.weighted,
       "weighted (min,+) needs build(..., weighted = true)")
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
+    type MinState = (Array[Double], Boolean)
     // superstep 0 marks every partition active (correct for any init, and —
     // see scaladoc — for any RESUMED state); thereafter a partition stays
     // active only while its vertices change
-    var vals = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => init
-    }).mapPartitions(x => x.map(a => (a, true)), preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vals.count()
-    var prev = vals
+    val start = init.mapPartitions(_.map(a => (a, true)), preservesPartitioning = true)
     // the hub MIRROR's own frontier: hot shard edges fire only on supersteps
     // where some hot vertex's value actually moved (compared driver-side —
     // the mirror is tiny by construction)
     var prevHot: Array[Double] = null
-    while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"min-changed-$it")
-      var hotActive = false
-      val hotV = if (g.hotIds.isEmpty) null
-                 else {
-                   val cur = hotMirror(g, vals.mapPartitions(
-                     it => it.map(_._1), preservesPartitioning = true))
-                   hotActive = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
-                   prevHot = cur
-                   sc.broadcast(cur)
-                 }
-      val (nv, gth) = minStep(g, vals, delta, changedAcc, hotV, hotActive, useWeights)
-      val newVals = nv.persist(StorageLevel.MEMORY_AND_DISK)
-      // long-diameter graphs (chains) run many supersteps: bound lineage
-      if ((it + 1) % 16 == 0) newVals.localCheckpoint()
-      newVals.count()
-      gth.unpersist(blocking = false)
-      if (hotV != null) hotV.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newVals
-      vals = newVals
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= maxIterations)
-          writeCheckpoint(g, c, it, converged,
-            vals.mapPartitions(x => x.map(_._1), preservesPartitioning = true),
-            metrics)
-      }
-    }
-    val out = materialize(g, vals.mapPartitions(
-      it => it.map(_._1), preservesPartitioning = true))
-    vals.unpersist(blocking = false)
-    (out, it)
+    CsrLoop.run(g, CsrLoop.Step(start, null), maxIterations,
+        hub = CsrLoop.Hub[MinState](1, (s, li, out, o) => out(o) = s._1(li)),
+        untilQuiet = true,
+        durable = cp.map(CsrLoop.Durable[MinState](_, _._1, (_, true)))) {
+      (vals, hotV, _, changed) =>
+        val hotActive = hotV != null && {
+          val cur = hotV.value
+          val moved = prevHot == null || !java.util.Arrays.equals(prevHot, cur)
+          prevHot = cur
+          moved
+        }
+        CsrLoop.exchange(g, gatherMinPhase(vals, g, delta, hotV, hotActive, useWeights), vals) {
+          (vm, inIdx, oldState, recs) =>
+            val old = oldState._1
+            val acc = Array.fill(vm.nRecv)(Double.PositiveInfinity)
+            recs.foreach { case (q, vs) =>
+              val idx = inIdx(q)
+              var i = 0
+              while (i < vs.length) { if (vs(i) < acc(idx(i))) acc(idx(i)) = vs(i); i += 1 }
+            }
+            val nV = vm.ids.length
+            val out = new Array[Double](nV)
+            var moved = 0L
+            var i = 0
+            while (i < vm.nRecv) {
+              val nv = if (acc(i) < old(i)) acc(i) else old(i)
+              out(i) = nv
+              if (nv < old(i)) moved += 1
+              i += 1
+            }
+            while (i < nV) { out(i) = old(i); i += 1 }
+            changed.add(moved)
+            (out, moved > 0L)
+        }
+    }((vm, s) => RankBlock(vm.ids, s._1))
   }
 
-  /** HashMin connected components on the (min, +) kernel: every vertex
-    * starts as its own label and adopts the minimum label reachable along
-    * the graph's edges. For the reference's WEAK components semantics
-    * (`src/ConnectedComponents.cpp`; undirected ⊕=min), build the PrGraph on
-    * a bidirectional edge set (e.g. `LinkGraph.undirected`). */
-  def connectedComponents(g: PrGraph, maxIterations: Int = 1 << 20,
-                          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val init = g.verts.mapPartitions({ it =>
+  /** Every vertex's own id as an exact-integer Double label. */
+  private def idLabels(g: PrGraph): RDD[Array[Double]] =
+    g.verts.mapPartitions({ it =>
       val vm = it.next()
       val a = new Array[Double](vm.ids.length)
       var i = 0
@@ -1452,8 +1141,15 @@ object GatherScatter {
       }
       Iterator.single(a)
     }, preservesPartitioning = true)
-    minFixpoint(g, init, delta = 0.0, maxIterations, cp = cp)
-  }
+
+  /** HashMin connected components on the (min, +) kernel: every vertex
+    * starts as its own label and adopts the minimum label reachable along
+    * the graph's edges. For the reference's WEAK components semantics
+    * (`src/ConnectedComponents.cpp`; undirected ⊕=min), build the PrGraph on
+    * a bidirectional edge set (e.g. `LinkGraph.undirected`). */
+  def connectedComponents(g: PrGraph, maxIterations: Int = 1 << 20,
+                          cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    minFixpoint(g, idLabels(g), delta = 0.0, maxIterations, cp = cp)
 
   /** BFS levels from `source` on the (min, +) kernel (delta = 1 along
     * out-edges). Unreached vertices keep +∞ (the column engine's -1 analog). */
@@ -1602,29 +1298,27 @@ object GatherScatter {
       }
     }
 
-  private def labelStep(g: PrGraph, labels: RDD[Array[Double]],
-      changedAcc: org.apache.spark.util.LongAccumulator,
-      hotL: Broadcast[Array[Double]]): (RDD[Array[Double]], RDD[_]) = {
-    val idPart = new IdPartitioner(g.numPartitions)
-    val gathered = gatherLabelPhase(labels, g, hotL)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, labels, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val p = TaskContext.getPartitionId()
+  /** Community label propagation on the CSR exchange (semantics: column
+    * engine's `LabelPropagation` — synchronous, mode-of-neighbor-labels,
+    * smaller label on ties, fixed `iterations` budget with early stop at
+    * the no-label-moved fixpoint). Build the PrGraph on a bidirectional edge
+    * set (e.g. `LinkGraph.undirected`) for the undirected-community reading;
+    * message counts are per EDGE, like the column engine. Returns
+    * (label blocks, supersteps run); resumable via `cp` (labels are exact
+    * state and every superstep is dense, so a resumed run is identical). */
+  def labelPropagation(g: PrGraph, iterations: Int,
+                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) =
+    CsrLoop.run(g, CsrLoop.Step(idLabels(g), null), iterations, hub = scalarHub,
+        untilQuiet = true, durable = cp.map(valuesDurable)) { (labels, hotL, _, changed) =>
+      CsrLoop.exchange(g, gatherLabelPhase(labels, g, hotL), labels) { (vm, inIdx, old, recs) =>
         // collect (recvIdx, label, count) from every source partition
         val rc = new IntPairBuf // (recvIdx, count)
         val lb = new DblBuf
-        @inline def fold(q: Int, t: (Array[Int], Array[Double], Array[Int])): Unit = {
-          val idx = inIdx(q); val pos = t._1; val labv = t._2; val c = t._3
+        recs.foreach { case (q, (pos, labv, c)) =>
+          val idx = inIdx(q)
           var i = 0
           while (i < pos.length) { rc.add(idx(pos(i)), c(i)); lb.add(labv(i)); i += 1 }
         }
-        lIt.foreach { case (tp, (q, t)) => if (tp == p) fold(q, t) }
-        rIt.foreach { case (_, (q, t)) => fold(q, t) }
         val m = rc.m
         val recv = rc.trimA; val cnts = rc.trimB; val labv = lb.trim
         // counting sort by receiver, then per-receiver label merge + mode
@@ -1643,7 +1337,7 @@ object GatherScatter {
         }
         val nV = vm.ids.length
         val out = new Array[Double](nV)
-        var changed = 0L
+        var moved = 0L
         var r = 0
         while (r < nR) {
           val a = off(r); val b = off(r + 1)
@@ -1662,74 +1356,15 @@ object GatherScatter {
               j = k
             }
             out(r) = bestLab
-            if (bestLab != old(r)) changed += 1
+            if (bestLab != old(r)) moved += 1
           }
           r += 1
         }
         while (r < nV) { out(r) = old(r); r += 1 } // in-degree-0: keep label
-        changedAcc.add(changed)
-        Iterator.single(out)
-    }
-    (next, gathered)
-  }
-
-  /** Community label propagation on the CSR exchange (semantics: column
-    * engine's `LabelPropagation` — synchronous, mode-of-neighbor-labels,
-    * smaller label on ties, fixed `iterations` budget with early stop at
-    * the no-label-moved fixpoint). Build the PrGraph on a bidirectional edge
-    * set (e.g. `LinkGraph.undirected`) for the undirected-community reading;
-    * message counts are per EDGE, like the column engine. Returns
-    * (label blocks, supersteps run); resumable via `cp` (labels are exact
-    * state and every superstep is dense, so a resumed run is identical). */
-  def labelPropagation(g: PrGraph, iterations: Int,
-                       cp: Option[CsrCheckpoint] = None): (RDD[RankBlock], Int) = {
-    val sc = g.csr.sparkContext
-    var it = 0
-    var converged = false
-    var metrics = Vector.empty[IterationMetrics]
-    var labels = (cp.flatMap(readCheckpoint(g, _)) match {
-      case Some((r, i, conv, m)) => it = i; converged = conv; metrics = m; r
-      case None => g.verts.mapPartitions({ vIt =>
-        val vm = vIt.next()
-        val a = new Array[Double](vm.ids.length)
-        var i = 0
-        while (i < a.length) {
-          require(vm.ids(i) < (1L << 53) && vm.ids(i) > -(1L << 53),
-          s"vertex id ${vm.ids(i)} not exact in a Double label")
-          a(i) = vm.ids(i).toDouble
-          i += 1
-        }
-        Iterator.single(a)
-      }, preservesPartitioning = true)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var prev = labels
-    while (!converged && it < iterations) {
-      val t0 = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"lp-changed-$it")
-      val hotL = if (g.hotIds.isEmpty) null else sc.broadcast(hotMirror(g, labels))
-      val (nl, gth) = labelStep(g, labels, changedAcc, hotL)
-      val newLabels = nl.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((it + 1) % 16 == 0) newLabels.localCheckpoint()
-      newLabels.count()
-      gth.unpersist(blocking = false)
-      if (hotL != null) hotL.unpersist(blocking = false)
-      prev.unpersist(blocking = false)
-      prev = newLabels
-      labels = newLabels
-      it += 1
-      converged = changedAcc.value == 0L
-      cp.foreach { c =>
-        metrics :+= IterationMetrics(it, changedAcc.value,
-          (System.nanoTime() - t0) / 1000000)
-        if (it % c.every == 0 || converged || it >= iterations)
-          writeCheckpoint(g, c, it, converged, labels, metrics)
+        changed.add(moved)
+        out
       }
-    }
-    val out = materialize(g, labels)
-    labels.unpersist(blocking = false)
-    (out, it)
-  }
+    }(rankBlock)
 
   private def singleSourceInit(g: PrGraph, source: Long): RDD[Array[Double]] =
     g.verts.mapPartitions({ it =>

@@ -5,7 +5,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 import GatherScatter.{IdPartitioner, PrGraph}
 
@@ -26,20 +25,16 @@ import GatherScatter.{IdPartitioner, PrGraph}
  *  2. gather: per-edge ⊗(srcVec, weight, dstVec) computed where the edges
  *     live, pre-summed (⊕ = elementwise vector add) into one K-slot per
  *     unique dst — hub fan-in stays structurally two-phase;
- *  3. the row-reduce all-to-all: the scalar kernel's split exchange, K-wide
- *     (self-contributions never enter the shuffle), folded through the
- *     static incoming-index tables, then the dense apply.
+ *  3. the row-reduce all-to-all: the [[CsrLoop]] split exchange, K-wide,
+ *     folded through the static incoming-index tables, then the dense apply.
  *
  * Cross-executor bytes per superstep = 2 × (partition cut) × K doubles
  * (mirrors out, contributions back) — zero under conversation co-location,
  * and exactly GraphMat's x-broadcast + y-reduce volume in the general case.
- * 2-op vector programs ([[VecKernel.needsRecv]] = false, e.g. the LDA init
- * pass) skip the mirror phase entirely and pay the scalar kernel's single
- * exchange, K-wide.
- *
- * Hot (degree-split) srcs ride the existing mirror broadcast, K-wide: their
- * edges live with the RECEIVER partition, so the dst vectors are local and
- * only the hub's own K-vector arrives by broadcast.
+ * 2-op vector programs ([[VecKernel.needsRecv]] = false,
+ * e.g. the LDA init pass) skip the mirror phase and pay the single
+ * exchange, K-wide. Hot (degree-split) srcs read their K-vector from the
+ * hub mirror; their edges live with the receiver, so dst vectors are local.
  *
  * Instantiated for the reference's two vector-state programs:
  *  - SGD matrix factorization (`src/SGD.cpp:36-236`): ⊗ = srcLv · (rating −
@@ -88,21 +83,12 @@ object VectorSuperstep {
       Iterator.single(a)
     }, preservesPartitioning = true)
 
-  /** K-wide hub mirror: collect the (few) hot vertices' vectors, broadcast. */
-  private def hotVecs(g: PrGraph, state: RDD[Array[Double]], k: Int): Array[Double] = {
-    if (g.hotIds.isEmpty) return Array.emptyDoubleArray
-    val pairs = state.zipPartitions(g.verts) { (sIt, vIt) =>
-      val st = sIt.next(); val vm = vIt.next()
-      Iterator.range(0, vm.hotHomeGlobal.length).map { i =>
-        val seg = new Array[Double](k)
-        System.arraycopy(st, vm.hotHomeLocal(i) * k, seg, 0, k)
-        (vm.hotHomeGlobal(i), seg)
-      }
-    }.collect()
-    val arr = new Array[Double](g.hotIds.length * k)
-    pairs.foreach { case (gi, seg) => System.arraycopy(seg, 0, arr, gi * k, k) }
-    arr
-  }
+  /** Hub mirror of a K-packed state: each hot vertex's K-vector. */
+  private def vecHub(k: Int) = CsrLoop.Hub[Array[Double]](k,
+    (s, li, out, o) => System.arraycopy(s, li * k, out, o, k))
+
+  private def vecBlock(k: Int): (GatherScatter.VertexMeta, Array[Double]) => VecBlock =
+    (vm, s) => VecBlock(vm.ids, k, s)
 
   /** Phase 1: ship each source block the receiver vectors its edges need —
     * packed in the SAME order as its unique-dst table, so the gather indexes
@@ -127,17 +113,14 @@ object VectorSuperstep {
         }
     }
 
-  /** One synchronous vector superstep. Returns (next state — lazy, caller
-    * persists+counts, the gathered split-exchange handle and the hub
-    * broadcast — caller frees both after materializing). */
+  /** One synchronous vector superstep of `kern` with hub mirror `hotBc`
+    * (null on hub-less graphs) and per-superstep `globals`. */
   private def step(g: PrGraph, state: RDD[Array[Double]], kern: VecKernel,
-                   globalsArr: Array[Double])
-      : (RDD[Array[Double]], RDD[_], Broadcast[Array[Double]]) = {
+                   hotBc: Broadcast[Array[Double]], globals: Array[Double])
+      : CsrLoop.Step[Array[Double]] = {
     val sc = state.sparkContext
     val k = kern.k
     val idPart = new IdPartitioner(g.numPartitions)
-    val hotBc = sc.broadcast(hotVecs(g, state, k))
-    val globalsBc = sc.broadcast(globalsArr)
     val hotIdsLoc = g.hotIds
     val mirrors: RDD[(Int, (Int, Array[Double]))] =
       if (kern.needsRecv) mirrorPhase(state, g, k).partitionBy(idPart)
@@ -146,7 +129,6 @@ object VectorSuperstep {
       .zipPartitions(state, g.csr, g.meta, preservesPartitioning = false) {
         (mIt, sIt, cIt, metaIt) =>
           val st = sIt.next(); val blk = cIt.next(); val (vm, inIdx) = metaIt.next()
-          val gl = globalsBc.value
           val scratch = new Array[Double](k)
           val p = TaskContext.getPartitionId()
           val need = kern.needsRecv
@@ -185,7 +167,7 @@ object VectorSuperstep {
                 kern.edge(srcVec, si * k, blk.srcs(si),
                   if (ew == null) 1.0 else ew(e),
                   rv, oi * k, ids(oi),
-                  acc, oi * k, gl, scratch)
+                  acc, oi * k, globals, scratch)
                 e += 1
               }
               out(tp) = acc
@@ -205,85 +187,37 @@ object VectorSuperstep {
               kern.edge(hv, hi * k, hotIdsLoc(hi),
                 if (hw == null) 1.0 else hw(e),
                 rv, oi * k, ids(oi),
-                acc, oi * k, gl, scratch)
+                acc, oi * k, globals, scratch)
               e += 1
             }
           }
           Iterator.range(0, out.length).filter(out(_) != null)
             .map(tp => (tp, (p, out(tp))))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    // split exchange: self-contributions stay in the cached gather output
-    val remote = gathered.mapPartitionsWithIndex(
-        (p, it) => it.filter(_._1 != p), preservesPartitioning = false)
-      .partitionBy(idPart)
-    val next = remote.zipPartitions(gathered, g.meta, state, preservesPartitioning = true) {
-      (rIt, lIt, mIt, oIt) =>
-        val (vm, inIdx) = mIt.next(); val old = oIt.next()
-        val gl = globalsBc.value
-        val p = TaskContext.getPartitionId()
-        val acc = new Array[Double](vm.nRecv * k)
-        @inline def fold(q: Int, vals: Array[Double]): Unit = {
-          val idx = inIdx(q)
-          var j = 0
-          while (j < idx.length) {
-            val dst = idx(j) * k; val src = j * k
-            var d = 0
-            while (d < k) { acc(dst + d) += vals(src + d); d += 1 }
-            j += 1
-          }
+      }
+    CsrLoop.exchange(g, gathered, state) { (vm, inIdx, old, recs) =>
+      val acc = new Array[Double](vm.nRecv * k)
+      recs.foreach { case (q, vals) =>
+        val idx = inIdx(q)
+        var j = 0
+        while (j < idx.length) {
+          val dst = idx(j) * k; val src = j * k
+          var d = 0
+          while (d < k) { acc(dst + d) += vals(src + d); d += 1 }
+          j += 1
         }
-        lIt.foreach { case (tp, (q, vals)) => if (tp == p) fold(q, vals) }
-        rIt.foreach { case (_, (q, vals)) => fold(q, vals) }
-        val nV = vm.ids.length
-        val out = new Array[Double](nV * k)
-        var i = 0
-        while (i < vm.nRecv) {
-          kern.applyRecv(old, acc, out, i * k, vm.ids(i), gl)
-          i += 1
-        }
-        // in-degree-0 vertices never receive: keep their vectors
-        val nR = vm.nRecv * k
-        System.arraycopy(old, nR, out, nR, nV * k - nR)
-        Iterator.single(out)
+      }
+      val nV = vm.ids.length
+      val out = new Array[Double](nV * k)
+      var i = 0
+      while (i < vm.nRecv) {
+        kern.applyRecv(old, acc, out, i * k, vm.ids(i), globals)
+        i += 1
+      }
+      // in-degree-0 vertices never receive: keep their vectors
+      val nR = vm.nRecv * k
+      System.arraycopy(old, nR, out, nR, nV * k - nR)
+      out
     }
-    (next, gathered, hotBc)
-  }
-
-  /** Drive `iterations` supersteps of `kern` from `state0` (consumed:
-    * unpersisted as soon as the first step lands). `globalsFn` recomputes
-    * the broadcast globals before every superstep (LDA's
-    * do_every_iteration); null-safe default = none. */
-  private def drive(g: PrGraph, state0: RDD[Array[Double]], kern: VecKernel,
-                    iterations: Int,
-                    globalsFn: RDD[Array[Double]] => Array[Double] = null)
-      : RDD[Array[Double]] = {
-    var state = state0
-    var it = 0
-    while (it < iterations) {
-      val gl = if (globalsFn == null) Array.emptyDoubleArray else globalsFn(state)
-      val (nextLazy, gathered, hotBc) = step(g, state, kern, gl)
-      val next = nextLazy.persist(StorageLevel.MEMORY_AND_DISK)
-      // bound lineage depth for long runs: every 16 supersteps the persisted
-      // state also truncates its chain (executor loss then recomputes at
-      // most 16 steps, never back to iteration 0)
-      if (it % 16 == 15) next.localCheckpoint()
-      next.count()
-      gathered.unpersist(blocking = false)
-      hotBc.unpersist(blocking = false)
-      state.unpersist(blocking = false)
-      state = next
-      it += 1
-    }
-    state
-  }
-
-  private def toBlocks(g: PrGraph, state: RDD[Array[Double]], k: Int): RDD[VecBlock] = {
-    val out = state.zipPartitions(g.verts, preservesPartitioning = true) { (sIt, vIt) =>
-      Iterator.single(VecBlock(vIt.next().ids, k, sIt.next()))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    state.unpersist(blocking = false)
-    out
   }
 
   /** One result block per partition: `vecs` is K-packed, aligned to ids. */
@@ -331,9 +265,9 @@ object VectorSuperstep {
           init: (Long, Int) => Double): RDD[VecBlock] = {
     require(g.weighted,
       "sgd needs per-edge ratings: build the graph with weighted = true")
-    val state0 = initState(g, k, init).persist(StorageLevel.MEMORY_AND_DISK)
-    state0.count()
-    toBlocks(g, drive(g, state0, new SgdKernel(k, lambda, stepSize), iterations), k)
+    val kern = new SgdKernel(k, lambda, stepSize)
+    CsrLoop.run(g, CsrLoop.Step(initState(g, k, init), null), iterations, hub = vecHub(k))(
+      (st, hotBc, _, _) => step(g, st, kern, hotBc, Array.emptyDoubleArray))(vecBlock(k))._1
   }
 
   // ---- LDA ----------------------------------------------------------------
@@ -438,13 +372,15 @@ object VectorSuperstep {
         Iterator.single(acc)
       }.reduce { (a, b) => var d = 0; while (d < k) { a(d) += b(d); d += 1 }; a }
 
-    val zeros = initState(g, k, (_, _) => 0.0).persist(StorageLevel.MEMORY_AND_DISK)
-    zeros.count()
-    val inited = drive(g, zeros, new LdaInitKernel(k, gnTab), 1)
+    // superstep 0 is the init pass from all-zero vectors; every later one
+    // refreshes the global topic vector first (do_every_iteration)
+    val initKern = new LdaInitKernel(k, gnTab)
     val kern = new LdaKernel(k, alpha, eta, termMinId)
-    val done = drive(g, inited, kern, iterations,
-      globalsFn = st => globalN(st).map(_ + v * (eta - 1.0)))
-    toBlocks(g, done, k)
+    CsrLoop.run(g, CsrLoop.Step(initState(g, k, (_, _) => 0.0), null), iterations + 1,
+        hub = vecHub(k)) { (st, hotBc, it, _) =>
+      if (it == 0) step(g, st, initKern, hotBc, Array.emptyDoubleArray)
+      else step(g, st, kern, hotBc, globalN(st).map(_ + v * (eta - 1.0)))
+    }(vecBlock(k))._1
   }
 
   /** Deterministic bipartite rating fixture for benchmarks: `nUsers` users,

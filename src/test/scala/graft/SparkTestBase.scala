@@ -17,6 +17,15 @@ object SparkTestBase {
     s
   }
 
+  /** Filesystem path of a reference graph vendored under
+    * `src/test/resources/mtx/` (written with `MtxReader.write` from the
+    * triples in FIXTURES.md §2). A graph that is not vendored yields its
+    * would-be path, so a test that needs it fails naming the missing file. */
+  def mtx(name: String): String =
+    Option(getClass.getResource(s"/mtx/$name"))
+      .map(u => java.nio.file.Paths.get(u.toURI).toString)
+      .getOrElse(s"src/test/resources/mtx/$name")
+
   /** The reference's `data/test.bin.mtx` as a literal — 8 vertices, 13
     * unit-weight edges (FIXTURES.md §2, decoded from the binary fixture). */
   val testGraphEdges: Seq[(Long, Long)] = Seq(
