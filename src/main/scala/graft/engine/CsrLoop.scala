@@ -198,9 +198,10 @@ private[engine] object CsrLoop {
     var it = 0
     var converged = false
     var metrics = Vector.empty[IterationMetrics]
+    var lineage = true // only the first commit of a run that did not resume
     var state = durable.flatMap(d => GatherScatter.readCheckpoint(g, d.cp).map((d, _))) match {
       case Some((d, (values, i, conv, m))) =>
-        it = i; converged = conv; metrics = m
+        it = i; converged = conv; metrics = m; lineage = false
         values.mapPartitions(_.map(d.resume), preservesPartitioning = true)
       case None => init.next
     }
@@ -253,9 +254,12 @@ private[engine] object CsrLoop {
         durable.foreach { d =>
           metrics :+= IterationMetrics(it, if (changed == null) 0L else changed.value,
             (System.nanoTime() - t0) / 1000000)
-          if (it % d.cp.every == 0 || converged || it >= maxSteps)
+          if (it % d.cp.every == 0 || converged || it >= maxSteps) {
             GatherScatter.writeCheckpoint(g, d.cp, it, converged,
-              state.mapPartitions(_.map(d.values), preservesPartitioning = true), metrics)
+              state.mapPartitions(_.map(d.values), preservesPartitioning = true), metrics,
+              lineage)
+            lineage = false
+          }
         }
       }
     }

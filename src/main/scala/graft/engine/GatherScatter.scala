@@ -74,7 +74,8 @@ import graft.core.LinkGraph
   * supersteps the full per-partition vertex state is committed under
   * `dir/runId/` together with per-partition lineage (`partitions.json`) and
   * per-superstep metrics (`metrics.jsonl`); `latest.json` is the commit
-  * pointer, written last. Pass to `pageRankConverged` / `minFixpoint` /
+  * pointer, written last (the commit protocol and its crash states are in
+  * [[SnapshotStore]]). Pass to `pageRankConverged` / `minFixpoint` /
   * `connectedComponents` / `bfs` / `sssp`: if a committed checkpoint already
   * exists under `dir/runId`, the run RESUMES from it instead of restarting.
   * All durable IO goes through `store` ([[SnapshotStore]]); in production
@@ -783,9 +784,12 @@ object GatherScatter {
   private val metricLineRe =
     """\{"iteration":(\d+),"changed":(-?\d+),"millis":(\d+)\}""".r
 
+  /** One commit (see the protocol in [[SnapshotStore]]). `lineage` writes
+    * `partitions.json`: the caller sets it on the first commit of a run that
+    * did not resume; a resumed run's pointer proves the file was written. */
   private[engine] def writeCheckpoint(g: PrGraph, cp: CsrCheckpoint, iter: Int,
       converged: Boolean, state: RDD[Array[Double]],
-      metrics: Seq[IterationMetrics]): Unit = {
+      metrics: Seq[IterationMetrics], lineage: Boolean): Unit = {
     val sc = g.csr.sparkContext
     val root = s"${cp.dir}/${cp.runId}"
     val statePath = s"$root/iter=$iter/state"
@@ -797,7 +801,7 @@ object GatherScatter {
       }, statePath)
     // per-partition lineage: the static layout a resumed run must reproduce
     // (vertex/receiver/edge counts per partition) — written once per run
-    if (!cp.store.exists(sc, s"$root/partitions.json")) {
+    if (lineage) {
       val rows = g.csr.zipPartitions(g.verts, preservesPartitioning = true) { (cIt, vIt) =>
         val blk = cIt.next(); val vm = vIt.next()
         var e = blk.hotEdgeSrcIdx.length
